@@ -11,6 +11,22 @@ On a real cluster the same builder is used with ``master()`` /
 ``spark.sql.shuffle.partitions`` sized to the data (rule of thumb:
 ~128 MB per shuffle partition → 100 TB scan ⇒ O(100k) partitions,
 set via config not code).
+
+Python workers: the session starts each executor's Python daemon from
+the engine's own entry module, ``__spark_worker__`` at the checkout
+root (put on the workers' ``PYTHONPATH`` here, so it is importable
+whatever the working directory). PySpark calls
+``importlib.invalidate_caches()`` at the start of every task, and
+before CPython 3.12 (gh-103200) that makes every cached ``zipimporter``
+re-read its archive's directory: with ``pyspark.zip``, the py4j zip and
+the spark-core jar first on the workers' path, about 0.2 s of CPU per
+task. The entry module drops those archives from ``sys.path`` when an
+unzipped pyspark and py4j of the same versions are importable (a
+pip-installed pyspark), and keeps the two zips otherwise (a host with
+only the Spark distribution), dropping only the jar; then it runs
+``pyspark.daemon``. Sessions built outside :func:`get_spark` (e.g.
+``metastore.py``, ``scripts/verify_driver_session.py``) keep Spark's
+default worker daemon.
 """
 
 from __future__ import annotations
@@ -18,6 +34,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the checkout root, which holds the worker daemon module
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -68,5 +87,9 @@ def get_spark(
         # managed-table location (saveAsTable without explicit path);
         # kept under the gitignored scratch dir
         .config("spark.sql.warehouse.dir", "/root/repo/.tmp/warehouse")
+        # Python workers start without re-reading pyspark.zip per task
+        # (module docstring)
+        .config("spark.python.daemon.module", "__spark_worker__")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
     )
     return builder.getOrCreate()

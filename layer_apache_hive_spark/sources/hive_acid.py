@@ -2713,7 +2713,7 @@ def _merge_event_frames(
         matched.groupBy(*ident)
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") > 1)
-        .select(ident[0])
+        .select(ident_cols[0])
     )
     del_parts: list[DataFrame] = []
     ins_parts: list[DataFrame] = []
@@ -3433,8 +3433,11 @@ def _split_update_one_job_partitioned(
             ignore_errors=True,
         )
         shutil.rmtree(os.path.join(pdir, ins_scratch), ignore_errors=True)
+    unioned = _union_insert_delete(events, dels, payload_schema)
+    if guard is not None:
+        unioned = unioned.unionByName(_guard_rows(guard, payload_schema))
     return _write_acid_dirs_one_job(
-        _union_insert_delete(events, dels, payload_schema),
+        unioned,
         scratch_of,
         final_of,
         payload_fields,
